@@ -35,6 +35,7 @@ from flink_cookbook_spark.streaming.sources import (
     _cpu_expr,
     _cpu_sql,
     _generator_grid_sql,
+    node_id_width,
 )
 
 _ORIGIN = 1_704_067_200  # 2024-01-01T00:00:00Z, the generator epoch
@@ -71,6 +72,7 @@ class NodeMetricsGridReader(DataSourceReader):
     def __init__(self, options) -> None:
         self.n_rows = int(options.get("n_rows", 10_000))
         self.n_nodes = int(options.get("n_nodes", N_NODES))
+        self.width = node_id_width(self.n_nodes)
         self.rate = float(options.get("rate_per_node", 2.0))
         self.n_parts = max(1, int(options.get("partitions", 8)))
 
@@ -89,7 +91,7 @@ class NodeMetricsGridReader(DataSourceReader):
         for i in range(partition.start, partition.end):
             node_no = i % self.n_nodes
             tick = i // self.n_nodes
-            yield (f"node-{node_no:02d}", _ORIGIN + int(tick / self.rate))
+            yield (f"node-{node_no:0{self.width}d}", _ORIGIN + int(tick / self.rate))
 
 
 class NodeMetricsGridStreamReader(SimpleDataSourceStreamReader):
@@ -107,6 +109,7 @@ class NodeMetricsGridStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, options) -> None:
         self.n_nodes = int(options.get("n_nodes", N_NODES))
+        self.width = node_id_width(self.n_nodes)
         self.rate = float(options.get("rate_per_node", 2.0))
         self.rows_per_batch = int(options.get("rows_per_batch", 100))
 
@@ -118,7 +121,7 @@ class NodeMetricsGridStreamReader(SimpleDataSourceStreamReader):
         # returned rows into its prefetch cache for exactly-once replay
         return [
             (
-                f"node-{i % self.n_nodes:02d}",
+                f"node-{i % self.n_nodes:0{self.width}d}",
                 _ORIGIN + int((i // self.n_nodes) / self.rate),
             )
             for i in range(start, end)

@@ -31,6 +31,20 @@ N_NODES = 5
 SEED = 42
 
 
+def node_id_width(n_nodes: int) -> int:
+    """Digits in a generated node id: at least 2 (``node-00``), and
+    enough for ``n_nodes - 1`` — Spark's ``lpad`` truncates a longer
+    string, which would fold node 105 into ``node-10``."""
+    return max(2, len(str(n_nodes - 1)))
+
+
+def _node_id(node_no: F.Column, n_nodes: int) -> F.Column:
+    """``node-<zero-padded node_no>``, the reference generator's key."""
+    return F.concat(
+        F.lit("node-"), F.lpad(node_no.cast("string"), node_id_width(n_nodes), "0")
+    )
+
+
 def kafka_metrics_stream(
     spark: SparkSession,
     topic: str = "node-metrics",
@@ -173,9 +187,7 @@ def synthetic_metrics_batch(
         F.lit(1704067200) + (F.col("tick") / F.lit(rate_per_node)).cast("long")
     )
     df = base.select(
-        F.concat(F.lit("node-"), F.lpad(F.col("node_no").cast("string"), 2, "0")).alias(
-            "node_id"
-        ),
+        _node_id(F.col("node_no"), n_nodes).alias("node_id"),
         ts.alias("ts"),
     )
     return df.select(
@@ -211,9 +223,7 @@ def synthetic_metrics_stream(
     else:
         rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
     df = rate.select(
-        F.concat(
-            F.lit("node-"), F.lpad((F.col("value") % n_nodes).cast("string"), 2, "0")
-        ).alias("node_id"),
+        _node_id(F.col("value") % n_nodes, n_nodes).alias("node_id"),
         F.col("timestamp").alias("ts"),
     )
     return df.select(

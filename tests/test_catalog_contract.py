@@ -99,3 +99,105 @@ def test_epoch_seconds_uniform_across_encodings(spark, tmp_path):
         r.e for r in as_ntz.select(epoch_millis("c").alias("e")).orderBy("e").collect()
     ]
     assert got_ms == [v * 1000 for v in want]
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, ids of the Spark jobs fn started). Jobs are tagged
+    with a one-off job group; the listener bus is drained before the
+    status tracker is read, so a job that has already run is listed."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"catalog-contract-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog contract probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_region(path, with_comment: bool) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {"r_regionkey": pa.array([0, 1], pa.int64()), "r_name": ["AFRICA", "AMERICA"]}
+    if with_comment:
+        cols["r_comment"] = ["a", "b"]
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_second_load_starts_no_job(spark, sf_dir):
+    """The schema memo: only a table's first load in a session infers the
+    parquet schema (a one-task job); later loads plan without a job."""
+    catalog.load(spark, sf_dir, "lineitem")
+    df, jobs = _jobs_started(spark, lambda: catalog.load(spark, sf_dir, "lineitem"))
+    assert jobs == [], f"a warm load started Spark jobs {jobs}"
+    assert "l_orderkey" in df.columns
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    """Staleness contract: the memo follows the file's identity, so a
+    table rewritten in place under the same path shows its new schema."""
+    _write_region(tmp_path / "region.parquet", with_comment=False)
+    first, jobs = _jobs_started(spark, lambda: catalog.load(spark, str(tmp_path), "region"))
+    # the probe sees the inference job of a cold load
+    assert jobs, "a cold load must infer the schema"
+    assert first.columns == ["r_regionkey", "r_name"]
+
+    _write_region(tmp_path / "region.parquet", with_comment=True)
+    again = catalog.load(spark, str(tmp_path), "region")
+    assert again.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(r.r_comment for r in again.collect()) == ["a", "b"]
+
+
+def test_other_session_infers_again(spark, tmp_path):
+    """Staleness contract: an entry inferred under one session is not
+    served to another."""
+    _write_region(tmp_path / "region.parquet", with_comment=False)
+    catalog.load(spark, str(tmp_path), "region")
+    other = spark.newSession()
+    _, jobs = _jobs_started(other, lambda: catalog.load(other, str(tmp_path), "region"))
+    assert jobs, "a load under another session must infer the schema again"
+
+
+def _assert_self_join_matches_duckdb(load, spark, sf_dir) -> None:
+    """Self-join two loads of lineitem (same order, different supplier)
+    and compare the count with the same join in DuckDB. The supplier
+    test is a filter over the joined rows: inside the join condition,
+    Spark re-resolves a self-join's trivially true ``a == a`` against
+    the two sides, which would hide a shared plan."""
+    import duckdb
+
+    l1 = load(spark, sf_dir, "lineitem")
+    l2 = load(spark, sf_dir, "lineitem")
+    got = (
+        l1.join(l2, l1["l_orderkey"] == l2["l_orderkey"])
+        .where(l1["l_suppkey"] != l2["l_suppkey"])
+        .count()
+    )
+    src = f"read_parquet('{sf_dir}/lineitem.parquet')"
+    want = duckdb.connect().execute(
+        f"SELECT count(*) FROM {src} l1 JOIN {src} l2 "
+        "ON l1.l_orderkey = l2.l_orderkey AND l1.l_suppkey <> l2.l_suppkey"
+    ).fetchone()[0]
+    assert want > 0
+    assert got == want
+
+
+def test_two_loads_self_join(spark, sf_dir):
+    """Only the schema is memoized: each load is a fresh plan with its own
+    attribute ids, so a self-join of two loads resolves each side."""
+    _assert_self_join_matches_duckdb(catalog.load, spark, sf_dir)
+
+
+def test_shared_dataframe_breaks_self_join(spark, sf_dir):
+    """The mutation test_two_loads_self_join guards against: if load
+    returned one cached DataFrame, both sides would carry the same
+    attribute ids and the self-join would be ambiguous."""
+    from pyspark.errors import AnalysisException
+
+    shared = catalog.load(spark, sf_dir, "lineitem")
+    with pytest.raises(AnalysisException, match="ambiguous"):
+        _assert_self_join_matches_duckdb(lambda *_: shared, spark, sf_dir)

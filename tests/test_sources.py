@@ -235,6 +235,43 @@ def test_python_datasource_zero_rows_is_empty(spark):
     assert NodeMetricsGridReader({"n_rows": 0}).partitions() == []
 
 
+def test_synthetic_node_ids_are_not_truncated(spark):
+    """Node ids pad to the width of the largest node number: Spark's
+    ``lpad`` truncates, so a fixed width of 2 folded 200 nodes into 100
+    ids. Up to 100 nodes the ids keep the reference's ``node-NN`` form."""
+    from flink_cookbook_spark.streaming.sources import synthetic_metrics_batch
+
+    def ids(n_rows, n_nodes):
+        df = synthetic_metrics_batch(spark, n_rows=n_rows, n_nodes=n_nodes)
+        return sorted(r.node_id for r in df.select("node_id").distinct().collect())
+
+    wide = ids(400, 200)
+    assert len(wide) == 200
+    assert wide[0] == "node-000" and wide[-1] == "node-199"
+    assert ids(5, 5) == [f"node-0{i}" for i in range(5)]
+    assert ids(200, 100) == [f"node-{i:02d}" for i in range(100)]
+
+
+def test_python_datasource_grid_parity_many_nodes(spark):
+    """The Python grid pads node ids to the same width as its twin."""
+    from flink_cookbook_spark.functions.time import epoch_seconds
+    from flink_cookbook_spark.sources.pydatasource import _ensure_registered
+    from flink_cookbook_spark.streaming.sources import synthetic_metrics_batch
+
+    _ensure_registered(spark)
+    src = (
+        spark.read.format("node_metrics_grid")
+        .option("n_rows", 400)
+        .option("n_nodes", 200)
+        .load()
+    )
+    twin = synthetic_metrics_batch(spark, n_rows=400, n_nodes=200).select(
+        "node_id", epoch_seconds("ts").alias("tsl")
+    )
+    assert src.exceptAll(twin).count() == 0
+    assert twin.exceptAll(src).count() == 0
+
+
 def test_observation_metrics_surface(spark, sf_dir):
     """Engine surface: ``df.observe(Observation, ...)`` — accumulator-
     style metrics collected DURING an action with no extra scan (the
