@@ -1,18 +1,12 @@
-"""Operators prepared in round 7, REGISTERED since round 8.
+"""Operators prepared in round 7, registered since round 8.
 
-Each entry in ``PREPARED_R8`` is a complete (query fn, DuckDB oracle)
-pair verified through the SAME comparison harness the driver uses (row
-count + column set + order-insensitive value hash) at the test SFs.
-
-Round-7 history: registration was deliberately deferred one round so
-the driver's bounded per-round correctness window (~50 entries, pending
-registrations first) could drain the pre-round-3 re-proof backlog
-(round-6 verdict ask #3). Round 8 flipped the switch:
-``registry._ensure_loaded`` imports this module and calls
-``activate()``, so the whole cohort is live in ``queries()`` /
-``oracle_sql()`` and covered by tests/test_oracle.py like any other
-registered query; tests/test_prepared.py keeps the semantic property
-tests plus a registration-integrity check.
+This module and its siblings ``prepared2`` ... ``prepared19`` register
+their queries with ``register(...)`` like every other operator module,
+under tag ``prepared-r8`` (``prepared-r10`` in ``prepared19``). Each is
+a complete (query fn, DuckDB oracle) pair held by tests/test_oracle.py
+to the same comparison the driver uses (row count + column set +
+order-insensitive value hash); tests/test_prepared.py keeps the
+semantic property tests.
 """
 
 from __future__ import annotations
@@ -21,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -3341,160 +3335,83 @@ FROM flags GROUP BY event_type
 """
 
 
-def _prepared() -> dict[str, tuple]:
-    return {
-        "pq_reconstruction_manifest": (pq_reconstruction_manifest, _pq_oracle()),
-        "asof_tolerance_join": (asof_tolerance_join, _ASOF_TOLERANCE_ORACLE),
-        "stratified_split_manifest": (stratified_split_manifest, _SPLIT_ORACLE),
-        "approx_percentile_accuracy": (approx_percentile_accuracy, _APPROX_PCT_ORACLE),
-        "lang_confusion_matrix": (lang_confusion_matrix, _lang_confusion_oracle()),
-        "minhash_band_sensitivity": (minhash_band_sensitivity, _band_sensitivity_oracle()),
-        "oov_rate": (oov_rate, _OOV_ORACLE),
-        "embedding_centroid_drift": (embedding_centroid_drift, _CENTROID_DRIFT_ORACLE),
-        "dedup_cluster_size_histogram": (dedup_cluster_size_histogram, _cluster_histogram_oracle()),
-        "session_gap_calibration": (session_gap_calibration, _SESSION_GAP_ORACLE),
-        "burstiness_fano": (burstiness_fano, _BURSTINESS_ORACLE),
-        "lateness_profile": (lateness_profile, _LATENESS_ORACLE),
-        "filter_funnel_report": (filter_funnel_report, _funnel_oracle()),
-        "temperature_mixture_weights": (
-            temperature_mixture_weights, _TEMPERATURE_ORACLE,
-        ),
-        "contrastive_pair_mining": (contrastive_pair_mining, _CONTRASTIVE_ORACLE),
-        "event_rate_profile": (event_rate_profile, _EVENT_RATE_ORACLE),
-        "zipf_fit": (zipf_fit, _ZIPF_ORACLE),
-        "watermark_completeness_sweep": (
-            watermark_completeness_sweep, _WATERMARK_SWEEP_ORACLE,
-        ),
-        "class_balance_report": (class_balance_report, _CLASS_BALANCE_ORACLE),
-        "kaplan_meier_survival": (kaplan_meier_survival, _KM_ORACLE),
-        "revenue_concentration_gini": (
-            revenue_concentration_gini, _GINI_ORACLE,
-        ),
-        "periodogram_peaks": (periodogram_peaks, _periodogram_oracle()),
-        "best_split_changepoint": (
-            best_split_changepoint, _CHANGEPOINT_ORACLE,
-        ),
-        "knn_label_consistency": (knn_label_consistency, _KNN_ORACLE),
-        "token_entropy_profile": (token_entropy_profile, _TOKEN_ENTROPY_ORACLE),
-        "source_concentration_hhi": (
-            source_concentration_hhi, _HHI_ORACLE,
-        ),
-        "event_trigram_motifs": (event_trigram_motifs, _TRIGRAM_ORACLE),
-        "order_backlog_profile": (order_backlog_profile, _BACKLOG_ORACLE),
-        "quality_threshold_sweep": (
-            quality_threshold_sweep, _QUALITY_SWEEP_ORACLE,
-        ),
-        "join_size_estimator": (join_size_estimator, _JOIN_SIZE_ORACLE),
-        "markov_stationary_distribution": (
-            markov_stationary_distribution, _markov_oracle(),
-        ),
-        "negative_sampling_table": (
-            negative_sampling_table, _NEG_TABLE_ORACLE,
-        ),
-        "packing_efficiency_report": (
-            packing_efficiency_report, _PACKING_ORACLE,
-        ),
-        "weekday_hour_heatmap": (weekday_hour_heatmap, _HEATMAP_ORACLE),
-        "audio_features": (audio_features, _audio_oracle()),
-        "moments_sketch_rollup": (moments_sketch_rollup, _MOMENTS_ORACLE),
-        "lsh_recall_estimate": (lsh_recall_estimate, _lsh_recall_oracle()),
-        "interarrival_profile": (interarrival_profile, _INTERARRIVAL_ORACLE),
-        "decile_lift_table": (decile_lift_table, _DECILE_ORACLE),
-        "water_filling_allocation": (
-            water_filling_allocation, _water_filling_oracle(),
-        ),
-        "anomaly_ensemble_consensus": (
-            anomaly_ensemble_consensus, _ENSEMBLE_ORACLE,
-        ),
-    }
-
-
-#: name -> (query fn, oracle SQL). Round 8: for each entry,
-#: ``register(name, oracle=oracle)(fn)`` (and move the fn into its
-#: family module if desired). Until then tests/test_prepared.py holds
-#: every pair to the driver-identical comparison contract. Later
-#: round-7 batches live in sibling modules (prepared2, ...) and merge
-#: here so every consumer (tests, lints, activate) sees ONE cohort.
-from flink_cookbook_spark.pipeline.prepared2 import PREPARED_R8_BATCH2
-from flink_cookbook_spark.pipeline.prepared3 import PREPARED_R8_BATCH3
-from flink_cookbook_spark.pipeline.prepared4 import PREPARED_R8_BATCH4
-from flink_cookbook_spark.pipeline.prepared5 import PREPARED_R8_BATCH5
-from flink_cookbook_spark.pipeline.prepared6 import PREPARED_R8_BATCH6
-from flink_cookbook_spark.pipeline.prepared7 import PREPARED_R8_BATCH7
-from flink_cookbook_spark.pipeline.prepared8 import PREPARED_R8_BATCH8
-from flink_cookbook_spark.pipeline.prepared9 import PREPARED_R8_BATCH9
-from flink_cookbook_spark.pipeline.prepared10 import PREPARED_R8_BATCH10
-from flink_cookbook_spark.pipeline.prepared11 import PREPARED_R8_BATCH11
-from flink_cookbook_spark.pipeline.prepared12 import PREPARED_R8_BATCH12
-from flink_cookbook_spark.pipeline.prepared13 import PREPARED_R8_BATCH13
-from flink_cookbook_spark.pipeline.prepared14 import PREPARED_R8_BATCH14
-from flink_cookbook_spark.pipeline.prepared15 import PREPARED_R8_BATCH15
-from flink_cookbook_spark.pipeline.prepared16 import PREPARED_R8_BATCH16
-from flink_cookbook_spark.pipeline.prepared17 import PREPARED_R8_BATCH17
-from flink_cookbook_spark.pipeline.prepared18 import PREPARED_R8_BATCH18
-
-PREPARED_R8 = _prepared()
-for _batch in (
-    PREPARED_R8_BATCH2,
-    PREPARED_R8_BATCH3,
-    PREPARED_R8_BATCH4,
-    PREPARED_R8_BATCH5,
-    PREPARED_R8_BATCH6,
-    PREPARED_R8_BATCH7,
-    PREPARED_R8_BATCH8,
-    PREPARED_R8_BATCH9,
-    PREPARED_R8_BATCH10,
-    PREPARED_R8_BATCH11,
-    PREPARED_R8_BATCH12,
-    PREPARED_R8_BATCH13,
-    PREPARED_R8_BATCH14,
-    PREPARED_R8_BATCH15,
-    PREPARED_R8_BATCH16,
-    PREPARED_R8_BATCH17,
-    PREPARED_R8_BATCH18,
-):
-    _dups = set(PREPARED_R8) & set(_batch)
-    if _dups:
-        # a real guard, not `assert`: stripped under python -O, a
-        # duplicate name would silently overwrite an earlier batch
-        raise ValueError(f"prepared batches collide: {sorted(_dups)}")
-    PREPARED_R8.update(_batch)
-
-# Round 10: the 38-pair cohort deferred through the round-9
-# registration freeze (r8 verdict ask #1) goes live — the pending
-# backlog drained to 9 in CORRECTNESS_r09, so 9 + 38 = 47 fits the
-# driver's 50-slot correctness window. Same activation contract, its
-# own tag so driver artifacts can attribute the wave.
-from flink_cookbook_spark.pipeline.prepared19 import PREPARED_R10
-
-_dups = set(PREPARED_R8) & set(PREPARED_R10)
-if _dups:
-    raise ValueError(f"prepared r10 cohort collides: {sorted(_dups)}")
-
-
-def activate() -> None:
-    """Register every prepared pair with the live registry — called by
-    ``registry._ensure_loaded`` since round 8. Idempotent: repeated
-    calls (every ``_ensure_loaded`` invocation, plus explicit calls in
-    tests) skip a name only when the existing spec IS this prepared
-    pair (same fn) — a FOREIGN module registering a colliding name
-    would otherwise silently shadow the harness-verified pair, so that
-    case raises at activation time instead of waiting for the verbatim
-    cohort test to notice."""
-    from flink_cookbook_spark import registry
-
-    for cohort, tag in (
-        (PREPARED_R8, "prepared-r8"),
-        (PREPARED_R10, "prepared-r10"),
-    ):
-        for name, (fn, oracle) in cohort.items():
-            existing = registry._REGISTRY.get(name)
-            if existing is not None:
-                if existing.fn is not fn:
-                    raise ValueError(
-                        f"prepared query {name!r} is shadowed by a foreign "
-                        f"registration ({existing.fn.__module__}."
-                        f"{existing.fn.__qualname__}) — rename one of them"
-                    )
-                continue
-            registry.register(name, oracle=oracle, tags=(tag,))(fn)
+register("pq_reconstruction_manifest", oracle=_pq_oracle(),
+         tags=("prepared-r8",))(pq_reconstruction_manifest)
+register("asof_tolerance_join", oracle=_ASOF_TOLERANCE_ORACLE,
+         tags=("prepared-r8",))(asof_tolerance_join)
+register("stratified_split_manifest", oracle=_SPLIT_ORACLE,
+         tags=("prepared-r8",))(stratified_split_manifest)
+register("approx_percentile_accuracy", oracle=_APPROX_PCT_ORACLE,
+         tags=("prepared-r8",))(approx_percentile_accuracy)
+register("lang_confusion_matrix", oracle=_lang_confusion_oracle(),
+         tags=("prepared-r8",))(lang_confusion_matrix)
+register("minhash_band_sensitivity", oracle=_band_sensitivity_oracle(),
+         tags=("prepared-r8",))(minhash_band_sensitivity)
+register("oov_rate", oracle=_OOV_ORACLE, tags=("prepared-r8",))(oov_rate)
+register("embedding_centroid_drift", oracle=_CENTROID_DRIFT_ORACLE,
+         tags=("prepared-r8",))(embedding_centroid_drift)
+register("dedup_cluster_size_histogram", oracle=_cluster_histogram_oracle(),
+         tags=("prepared-r8",))(dedup_cluster_size_histogram)
+register("session_gap_calibration", oracle=_SESSION_GAP_ORACLE,
+         tags=("prepared-r8",))(session_gap_calibration)
+register("burstiness_fano", oracle=_BURSTINESS_ORACLE,
+         tags=("prepared-r8",))(burstiness_fano)
+register("lateness_profile", oracle=_LATENESS_ORACLE,
+         tags=("prepared-r8",))(lateness_profile)
+register("filter_funnel_report", oracle=_funnel_oracle(),
+         tags=("prepared-r8",))(filter_funnel_report)
+register("temperature_mixture_weights", oracle=_TEMPERATURE_ORACLE,
+         tags=("prepared-r8",))(temperature_mixture_weights)
+register("contrastive_pair_mining", oracle=_CONTRASTIVE_ORACLE,
+         tags=("prepared-r8",))(contrastive_pair_mining)
+register("event_rate_profile", oracle=_EVENT_RATE_ORACLE,
+         tags=("prepared-r8",))(event_rate_profile)
+register("zipf_fit", oracle=_ZIPF_ORACLE, tags=("prepared-r8",))(zipf_fit)
+register("watermark_completeness_sweep", oracle=_WATERMARK_SWEEP_ORACLE,
+         tags=("prepared-r8",))(watermark_completeness_sweep)
+register("class_balance_report", oracle=_CLASS_BALANCE_ORACLE,
+         tags=("prepared-r8",))(class_balance_report)
+register("kaplan_meier_survival", oracle=_KM_ORACLE,
+         tags=("prepared-r8",))(kaplan_meier_survival)
+register("revenue_concentration_gini", oracle=_GINI_ORACLE,
+         tags=("prepared-r8",))(revenue_concentration_gini)
+register("periodogram_peaks", oracle=_periodogram_oracle(),
+         tags=("prepared-r8",))(periodogram_peaks)
+register("best_split_changepoint", oracle=_CHANGEPOINT_ORACLE,
+         tags=("prepared-r8",))(best_split_changepoint)
+register("knn_label_consistency", oracle=_KNN_ORACLE,
+         tags=("prepared-r8",))(knn_label_consistency)
+register("token_entropy_profile", oracle=_TOKEN_ENTROPY_ORACLE,
+         tags=("prepared-r8",))(token_entropy_profile)
+register("source_concentration_hhi", oracle=_HHI_ORACLE,
+         tags=("prepared-r8",))(source_concentration_hhi)
+register("event_trigram_motifs", oracle=_TRIGRAM_ORACLE,
+         tags=("prepared-r8",))(event_trigram_motifs)
+register("order_backlog_profile", oracle=_BACKLOG_ORACLE,
+         tags=("prepared-r8",))(order_backlog_profile)
+register("quality_threshold_sweep", oracle=_QUALITY_SWEEP_ORACLE,
+         tags=("prepared-r8",))(quality_threshold_sweep)
+register("join_size_estimator", oracle=_JOIN_SIZE_ORACLE,
+         tags=("prepared-r8",))(join_size_estimator)
+register("markov_stationary_distribution", oracle=_markov_oracle(),
+         tags=("prepared-r8",))(markov_stationary_distribution)
+register("negative_sampling_table", oracle=_NEG_TABLE_ORACLE,
+         tags=("prepared-r8",))(negative_sampling_table)
+register("packing_efficiency_report", oracle=_PACKING_ORACLE,
+         tags=("prepared-r8",))(packing_efficiency_report)
+register("weekday_hour_heatmap", oracle=_HEATMAP_ORACLE,
+         tags=("prepared-r8",))(weekday_hour_heatmap)
+register("audio_features", oracle=_audio_oracle(),
+         tags=("prepared-r8",))(audio_features)
+register("moments_sketch_rollup", oracle=_MOMENTS_ORACLE,
+         tags=("prepared-r8",))(moments_sketch_rollup)
+register("lsh_recall_estimate", oracle=_lsh_recall_oracle(),
+         tags=("prepared-r8",))(lsh_recall_estimate)
+register("interarrival_profile", oracle=_INTERARRIVAL_ORACLE,
+         tags=("prepared-r8",))(interarrival_profile)
+register("decile_lift_table", oracle=_DECILE_ORACLE,
+         tags=("prepared-r8",))(decile_lift_table)
+register("water_filling_allocation", oracle=_water_filling_oracle(),
+         tags=("prepared-r8",))(water_filling_allocation)
+register("anomaly_ensemble_consensus", oracle=_ENSEMBLE_ORACLE,
+         tags=("prepared-r8",))(anomaly_ensemble_consensus)

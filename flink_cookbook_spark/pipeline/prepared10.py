@@ -1,7 +1,7 @@
 """Tenth round-7 batch of round-8-prepared operators: distributional
 distance, a trained-and-evaluated model baseline, and causal hygiene.
 
-Same deferred-registration contract as ``prepared.py``. Wasserstein-1
+Same contract as ``prepared.py``. Wasserstein-1
 completes the drift-distance battery (PSI sees binned mass, KS the
 worst point, W1 the INTEGRATED shift — it keeps ordering information
 the other two discard); the logistic baseline is the engine's first
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 #: first-half/second-half split shared with the other drift tests.
 SPLIT_EPOCH_S = 1705363200
@@ -386,9 +386,9 @@ FROM one
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH10 = {
-    "wasserstein_drift": (wasserstein_drift, _W1_ORACLE),
-    "logistic_churn_baseline": (logistic_churn_baseline, _logit_oracle()),
-    "covariate_balance_smd": (covariate_balance_smd, _SMD_ORACLE),
-}
+register("wasserstein_drift", oracle=_W1_ORACLE,
+         tags=("prepared-r8",))(wasserstein_drift)
+register("logistic_churn_baseline", oracle=_logit_oracle(),
+         tags=("prepared-r8",))(logistic_churn_baseline)
+register("covariate_balance_smd", oracle=_SMD_ORACLE,
+         tags=("prepared-r8",))(covariate_balance_smd)

@@ -1,7 +1,7 @@
 """Eleventh round-7 batch of round-8-prepared operators: graph mixing,
 interval concurrency, SLO accounting, and count-model fitting.
 
-Same deferred-registration contract as ``prepared.py``. Assortativity
+Same contract as ``prepared.py``. Assortativity
 says WHO connects to whom (hubs-to-hubs or hubs-to-leaves — the number
 that predicts cascade behavior on the co-purchase graph); the
 concurrency profile is the classic sweep-line over session intervals,
@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -389,12 +389,10 @@ FROM fit
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH11 = {
-    "graph_assortativity": (graph_assortativity, _ASSORT_ORACLE),
-    "concurrent_sessions_profile": (
-        concurrent_sessions_profile, _CONC_ORACLE,
-    ),
-    "slo_burn_rate": (slo_burn_rate, _SLO_ORACLE),
-    "negative_binomial_fit": (negative_binomial_fit, _NB_ORACLE),
-}
+register("graph_assortativity", oracle=_ASSORT_ORACLE,
+         tags=("prepared-r8",))(graph_assortativity)
+register("concurrent_sessions_profile", oracle=_CONC_ORACLE,
+         tags=("prepared-r8",))(concurrent_sessions_profile)
+register("slo_burn_rate", oracle=_SLO_ORACLE, tags=("prepared-r8",))(slo_burn_rate)
+register("negative_binomial_fit", oracle=_NB_ORACLE,
+         tags=("prepared-r8",))(negative_binomial_fit)

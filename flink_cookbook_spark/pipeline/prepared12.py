@@ -1,7 +1,7 @@
 """Twelfth round-7 batch of round-8-prepared operators: sketch windows,
 content-defined chunking, and schema discovery.
 
-Same deferred-registration contract as ``prepared.py``. The sliding
+Same contract as ``prepared.py``. The sliding
 KMV closes the sketch family's last gap — MERGEABLE DISTINCTS OVER
 SLIDING WINDOWS (the exact fan-out trick of ``rolling_active_users``
 costs users x days x width; at ad-tech cardinalities only the sketch
@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
 from flink_cookbook_spark.pipeline.dedup import _SQL_HASH, _portable_hash
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -450,11 +450,9 @@ FROM (
     )
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH12 = {
-    "sliding_kmv_distinct": (sliding_kmv_distinct, _kmvw_oracle()),
-    "cdc_chunk_dedup": (cdc_chunk_dedup, _cdc_oracle()),
-    "column_similarity_matching": (
-        column_similarity_matching, _colsim_oracle(),
-    ),
-}
+register("sliding_kmv_distinct", oracle=_kmvw_oracle(),
+         tags=("prepared-r8",))(sliding_kmv_distinct)
+register("cdc_chunk_dedup", oracle=_cdc_oracle(),
+         tags=("prepared-r8",))(cdc_chunk_dedup)
+register("column_similarity_matching", oracle=_colsim_oracle(),
+         tags=("prepared-r8",))(column_similarity_matching)

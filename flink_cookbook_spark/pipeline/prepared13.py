@@ -1,7 +1,7 @@
 """Thirteenth round-7 batch of round-8-prepared operators: sequential
 decisions, aggregation paradoxes, and privacy governance.
 
-Same deferred-registration contract as ``prepared.py``. The UCB replay
+Same contract as ``prepared.py``. The UCB replay
 is the standard OFFLINE BANDIT EVALUATION (Li et al.'s replay method:
 step the policy through logged traffic, counting only the steps where
 the policy's choice matches the logged action) — the sequential-
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 #: conversion predicate shared with the experiment operators.
 BANDIT_CONVERT_VALUE = 90.0
@@ -498,10 +498,11 @@ FROM classes
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH13 = {
-    "ucb_bandit_replay": (ucb_bandit_replay, _ucb_oracle()),
-    "simpson_reversal_check": (simpson_reversal_check, _SIMPSON_ORACLE),
-    "dp_noise_calibration": (dp_noise_calibration, _dp_oracle()),
-    "k_anonymity_report": (k_anonymity_report, _KANON_ORACLE),
-}
+register("ucb_bandit_replay", oracle=_ucb_oracle(),
+         tags=("prepared-r8",))(ucb_bandit_replay)
+register("simpson_reversal_check", oracle=_SIMPSON_ORACLE,
+         tags=("prepared-r8",))(simpson_reversal_check)
+register("dp_noise_calibration", oracle=_dp_oracle(),
+         tags=("prepared-r8",))(dp_noise_calibration)
+register("k_anonymity_report", oracle=_KANON_ORACLE,
+         tags=("prepared-r8",))(k_anonymity_report)

@@ -1,7 +1,7 @@
 """Fourteenth round-7 batch of round-8-prepared operators: cooperative
 attribution, stylometry, and index numbers.
 
-Same deferred-registration contract as ``prepared.py``. Shapley
+Same contract as ``prepared.py``. Shapley
 attribution is the game-theoretic upgrade of the engine's attribution
 family (``purchase_attribution`` last-touch, ``multi_touch_
 attribution`` time-decay): credit each channel by its average marginal
@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 #: attribution channels (bit order fixed, alphabetical).
 SHAPLEY_CHANNELS = ("click", "error", "signup", "view")
@@ -352,9 +352,8 @@ GROUP BY py.y
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH14 = {
-    "shapley_attribution": (shapley_attribution, _shapley_oracle()),
-    "burrows_delta": (burrows_delta, _DELTA_ORACLE),
-    "laspeyres_price_index": (laspeyres_price_index, _LASPEYRES_ORACLE),
-}
+register("shapley_attribution", oracle=_shapley_oracle(),
+         tags=("prepared-r8",))(shapley_attribution)
+register("burrows_delta", oracle=_DELTA_ORACLE, tags=("prepared-r8",))(burrows_delta)
+register("laspeyres_price_index", oracle=_LASPEYRES_ORACLE,
+         tags=("prepared-r8",))(laspeyres_price_index)

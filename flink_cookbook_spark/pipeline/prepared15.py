@@ -2,7 +2,7 @@
 long-range dependence, control charts, tail risk, and rank
 correlation.
 
-Same deferred-registration contract as ``prepared.py``. The Hurst
+Same contract as ``prepared.py``. The Hurst
 exponent detects long-range dependence that ACF's fixed lags miss
 (H > 0.5 means shocks persist — exactly when the reference's
 z-score alerting over-fires); the Western Electric rules are the
@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -446,10 +446,9 @@ FROM agg
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH15 = {
-    "hurst_exponent": (hurst_exponent, _HURST_ORACLE),
-    "western_electric_rules": (western_electric_rules, _WE_ORACLE),
-    "value_at_risk": (value_at_risk, _VAR_ORACLE),
-    "kendall_tau_daily": (kendall_tau_daily, _KENDALL_ORACLE),
-}
+register("hurst_exponent", oracle=_HURST_ORACLE, tags=("prepared-r8",))(hurst_exponent)
+register("western_electric_rules", oracle=_WE_ORACLE,
+         tags=("prepared-r8",))(western_electric_rules)
+register("value_at_risk", oracle=_VAR_ORACLE, tags=("prepared-r8",))(value_at_risk)
+register("kendall_tau_daily", oracle=_KENDALL_ORACLE,
+         tags=("prepared-r8",))(kendall_tau_daily)

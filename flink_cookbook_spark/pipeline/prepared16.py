@@ -1,7 +1,7 @@
 """Sixteenth round-7 batch of round-8-prepared operators: distribution-
 free uncertainty and unseen-mass estimation.
 
-Same deferred-registration contract as ``prepared.py``. Split-conformal
+Same contract as ``prepared.py``. Split-conformal
 prediction is the modern distribution-free answer to "how wrong can
 this forecast be?" — a finite-sample coverage guarantee from nothing
 but a calibration split and an order statistic, which composes with
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -234,12 +234,7 @@ FROM spec
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH16 = {
-    "conformal_prediction_interval": (
-        conformal_prediction_interval, _CONFORMAL_ORACLE,
-    ),
-    "chao1_vocabulary_richness": (
-        chao1_vocabulary_richness, _CHAO1_ORACLE,
-    ),
-}
+register("conformal_prediction_interval", oracle=_CONFORMAL_ORACLE,
+         tags=("prepared-r8",))(conformal_prediction_interval)
+register("chao1_vocabulary_richness", oracle=_CHAO1_ORACLE,
+         tags=("prepared-r8",))(chao1_vocabulary_richness)

@@ -1,6 +1,6 @@
 """Seventeenth (capstone) round-7 batch: effective sample size.
 
-Same deferred-registration contract as ``prepared.py``. The hundredth
+Same contract as ``prepared.py``. The hundredth
 prepared operator closes the loop on the session's statistical-testing
 family: every z/U/KS/F test in the cohort prices evidence by the raw
 observation count, but an autocorrelated series carries FEWER
@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 #: autocorrelation lags folded into the ESS correction.
 ESS_LAGS = (1, 2, 3, 4, 5)
@@ -105,7 +105,5 @@ FROM agg
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH17 = {
-    "effective_sample_size": (effective_sample_size, _ess_oracle()),
-}
+register("effective_sample_size", oracle=_ess_oracle(),
+         tags=("prepared-r8",))(effective_sample_size)

@@ -1,6 +1,6 @@
 """Eighteenth round-7 batch: the geospatial family.
 
-Same deferred-registration contract as ``prepared.py``.  The cohort had
+Same contract as ``prepared.py``.  The cohort had
 no spatial operators at all; this batch adds the three canonical ones a
 warehouse needs — a grid-bucketed radius join (the spatial analogue of
 the banded LSH / bucketed range-join pattern used everywhere else in
@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 #: box origin / extent (degrees) and the md5-coin resolution.
 GEO_LAT0 = 40.0
@@ -321,9 +321,9 @@ FROM cells GROUP BY cell_x, cell_y
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH18 = {
-    "geo_radius_join": (geo_radius_join, _geo_radius_oracle()),
-    "geo_nearest_supplier": (geo_nearest_supplier, _geo_nearest_oracle()),
-    "geo_grid_density": (geo_grid_density, _geo_density_oracle()),
-}
+register("geo_radius_join", oracle=_geo_radius_oracle(),
+         tags=("prepared-r8",))(geo_radius_join)
+register("geo_nearest_supplier", oracle=_geo_nearest_oracle(),
+         tags=("prepared-r8",))(geo_nearest_supplier)
+register("geo_grid_density", oracle=_geo_density_oracle(),
+         tags=("prepared-r8",))(geo_grid_density)

@@ -3,12 +3,11 @@
 Round 9 froze registrations so the driver's ~50-slot correctness window
 could drain the 59-query pending backlog (round-8 verdict ask #1); the
 cohort was built and verified through the driver-identical harness that
-round but held out of the registry. Round 10 flipped it: with the
-backlog down to 9 pending names in CORRECTNESS_r09, ``PREPARED_R10``
-now merges into the activation path (pipeline/prepared.py, tag
-``prepared-r10``) and every pair is exercised by the registry-wide
-driver replica in tests/test_oracle.py. REVERIFY_AFTER needs no
-entries — these names had no driver record before registration.
+round but held out of the registry. Round 10 registered it: each batch
+below ends with its ``register(...)`` calls under tag ``prepared-r10``,
+and every pair is exercised by the registry-wide driver replica in
+tests/test_oracle.py. REVERIFY_AFTER needs no entries — these names had
+no driver record before registration.
 
 Batch 1's seven operators close real gaps (later batches are
 documented at their own section headers below):
@@ -51,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import NUDGE, rnd
+from flink_cookbook_spark.registry import NUDGE, register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -958,26 +957,23 @@ FROM calc
     )
 
 
-#: name -> (query fn, oracle SQL). Live since round 10:
-#: pipeline/prepared.py imports this dict and ``activate()`` registers
-#: every pair under tag "prepared-r10" (round 9 held it out of the
-#: registry while the pending backlog drained — r8 verdict ask #1).
-PREPARED_R10: dict = {
-    "welch_t_test": (welch_t_test, _WELCH_ORACLE),
-    "pacf_durbin_levinson": (pacf_durbin_levinson, _PACF_ORACLE),
-    "nelson_aalen_hazard": (nelson_aalen_hazard, _NA_ORACLE),
-    "ewma_control_chart": (ewma_control_chart, _ewma_oracle()),
-    "matryoshka_recall": (matryoshka_recall, _MAT_ORACLE),
-    "decision_stump_split": (decision_stump_split, _STUMP_ORACLE),
-    "retrieval_precision_recall_at_k": (
-        retrieval_precision_recall_at_k,
-        _pr_oracle(),
-    ),
-}
+register("welch_t_test", oracle=_WELCH_ORACLE, tags=("prepared-r10",))(welch_t_test)
+register("pacf_durbin_levinson", oracle=_PACF_ORACLE,
+         tags=("prepared-r10",))(pacf_durbin_levinson)
+register("nelson_aalen_hazard", oracle=_NA_ORACLE,
+         tags=("prepared-r10",))(nelson_aalen_hazard)
+register("ewma_control_chart", oracle=_ewma_oracle(),
+         tags=("prepared-r10",))(ewma_control_chart)
+register("matryoshka_recall", oracle=_MAT_ORACLE,
+         tags=("prepared-r10",))(matryoshka_recall)
+register("decision_stump_split", oracle=_STUMP_ORACLE,
+         tags=("prepared-r10",))(decision_stump_split)
+register("retrieval_precision_recall_at_k", oracle=_pr_oracle(),
+         tags=("prepared-r10",))(retrieval_precision_recall_at_k)
 
 
 # ==========================================================================
-# batch 2 (same deferred contract)
+# batch 2
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -1539,19 +1535,20 @@ FROM kerns
 """
 
 
-PREPARED_R10.update(
-    {
-        "page_hinkley_drift": (page_hinkley_drift, _PH_ORACLE),
-        "theil_decomposition": (theil_decomposition, _THEIL_ORACLE),
-        "kruskal_wallis_binned": (kruskal_wallis_binned, _KW_ORACLE),
-        "score_ks_separation": (score_ks_separation, _kssep_oracle()),
-        "mmd_linear_drift": (mmd_linear_drift, _mmd_oracle()),
-    }
-)
+register("page_hinkley_drift", oracle=_PH_ORACLE,
+         tags=("prepared-r10",))(page_hinkley_drift)
+register("theil_decomposition", oracle=_THEIL_ORACLE,
+         tags=("prepared-r10",))(theil_decomposition)
+register("kruskal_wallis_binned", oracle=_KW_ORACLE,
+         tags=("prepared-r10",))(kruskal_wallis_binned)
+register("score_ks_separation", oracle=_kssep_oracle(),
+         tags=("prepared-r10",))(score_ks_separation)
+register("mmd_linear_drift", oracle=_mmd_oracle(),
+         tags=("prepared-r10",))(mmd_linear_drift)
 
 
 # ==========================================================================
-# batch 3 (same deferred contract)
+# batch 3
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -2233,23 +2230,22 @@ GROUP BY source
 """
 
 
-PREPARED_R10.update(
-    {
-        "mann_kendall_trend": (mann_kendall_trend, _MK_ORACLE),
-        "unigram_perplexity_split": (unigram_perplexity_split, _PPL_ORACLE),
-        "jensen_shannon_source_divergence": (
-            jensen_shannon_source_divergence,
-            _JS_ORACLE,
-        ),
-        "levene_variance_test": (levene_variance_test, _LEVENE_ORACLE),
-        "friedman_test": (friedman_test, _FRIEDMAN_ORACLE),
-        "readability_scores": (readability_scores, _READ_ORACLE),
-    }
-)
+register("mann_kendall_trend", oracle=_MK_ORACLE,
+         tags=("prepared-r10",))(mann_kendall_trend)
+register("unigram_perplexity_split", oracle=_PPL_ORACLE,
+         tags=("prepared-r10",))(unigram_perplexity_split)
+register("jensen_shannon_source_divergence", oracle=_JS_ORACLE,
+         tags=("prepared-r10",))(jensen_shannon_source_divergence)
+register("levene_variance_test", oracle=_LEVENE_ORACLE,
+         tags=("prepared-r10",))(levene_variance_test)
+register("friedman_test", oracle=_FRIEDMAN_ORACLE,
+         tags=("prepared-r10",))(friedman_test)
+register("readability_scores", oracle=_READ_ORACLE,
+         tags=("prepared-r10",))(readability_scores)
 
 
 # ==========================================================================
-# batch 4 (same deferred contract)
+# batch 4
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -2984,26 +2980,22 @@ FROM fit
 """
 
 
-PREPARED_R10.update(
-    {
-        "spearman_lead_lag": (spearman_lead_lag, _SPEARMAN_ORACLE),
-        "adf_unit_root_proxy": (adf_unit_root_proxy, _ADF_ORACLE),
-        "mutual_information_profile": (
-            mutual_information_profile,
-            _MI_ORACLE,
-        ),
-        "odds_ratio_table": (odds_ratio_table, _OR_ORACLE),
-        "cochran_q_test": (cochran_q_test, _COCHRAN_ORACLE),
-        "seasonal_strength_profile": (
-            seasonal_strength_profile,
-            _SEASONAL_ORACLE,
-        ),
-    }
-)
+register("spearman_lead_lag", oracle=_SPEARMAN_ORACLE,
+         tags=("prepared-r10",))(spearman_lead_lag)
+register("adf_unit_root_proxy", oracle=_ADF_ORACLE,
+         tags=("prepared-r10",))(adf_unit_root_proxy)
+register("mutual_information_profile", oracle=_MI_ORACLE,
+         tags=("prepared-r10",))(mutual_information_profile)
+register("odds_ratio_table", oracle=_OR_ORACLE,
+         tags=("prepared-r10",))(odds_ratio_table)
+register("cochran_q_test", oracle=_COCHRAN_ORACLE,
+         tags=("prepared-r10",))(cochran_q_test)
+register("seasonal_strength_profile", oracle=_SEASONAL_ORACLE,
+         tags=("prepared-r10",))(seasonal_strength_profile)
 
 
 # ==========================================================================
-# batch 5 (same deferred contract)
+# batch 5
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -3764,29 +3756,20 @@ FROM joined GROUP BY k
 """
 
 
-PREPARED_R10.update(
-    {
-        "ljung_box_test": (ljung_box_test, _lb_oracle()),
-        "granger_causality_proxy": (
-            granger_causality_proxy,
-            _GRANGER_ORACLE,
-        ),
-        "poisson_rate_ratio_test": (
-            poisson_rate_ratio_test,
-            _POISSON_ORACLE,
-        ),
-        "mcnemar_test": (mcnemar_test, _MCNEMAR_ORACLE),
-        "isotonic_calibration_binned": (
-            isotonic_calibration_binned,
-            _ISO_ORACLE,
-        ),
-        "hill_tail_index": (hill_tail_index, _hill_oracle()),
-    }
-)
+register("ljung_box_test", oracle=_lb_oracle(), tags=("prepared-r10",))(ljung_box_test)
+register("granger_causality_proxy", oracle=_GRANGER_ORACLE,
+         tags=("prepared-r10",))(granger_causality_proxy)
+register("poisson_rate_ratio_test", oracle=_POISSON_ORACLE,
+         tags=("prepared-r10",))(poisson_rate_ratio_test)
+register("mcnemar_test", oracle=_MCNEMAR_ORACLE, tags=("prepared-r10",))(mcnemar_test)
+register("isotonic_calibration_binned", oracle=_ISO_ORACLE,
+         tags=("prepared-r10",))(isotonic_calibration_binned)
+register("hill_tail_index", oracle=_hill_oracle(),
+         tags=("prepared-r10",))(hill_tail_index)
 
 
 # ==========================================================================
-# batch 6 (same deferred contract) — LLM-pipeline measurement ops
+# batch 6 — LLM-pipeline measurement ops
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -4237,24 +4220,17 @@ FROM scored s CROSS JOIN const c
 """
 
 
-PREPARED_R10.update(
-    {
-        "hubness_score": (hubness_score, _HUB_ORACLE),
-        "ngram_coverage_overlap": (ngram_coverage_overlap, _NGCOV_ORACLE),
-        "boilerplate_prefix_clusters": (
-            boilerplate_prefix_clusters,
-            _BP_ORACLE,
-        ),
-        "random_projection_distortion": (
-            random_projection_distortion,
-            _jl_oracle(),
-        ),
-    }
-)
+register("hubness_score", oracle=_HUB_ORACLE, tags=("prepared-r10",))(hubness_score)
+register("ngram_coverage_overlap", oracle=_NGCOV_ORACLE,
+         tags=("prepared-r10",))(ngram_coverage_overlap)
+register("boilerplate_prefix_clusters", oracle=_BP_ORACLE,
+         tags=("prepared-r10",))(boilerplate_prefix_clusters)
+register("random_projection_distortion", oracle=_jl_oracle(),
+         tags=("prepared-r10",))(random_projection_distortion)
 
 
 # ==========================================================================
-# batch 7 (same deferred contract) — warehouse / supply-chain analytics
+# batch 7 — warehouse / supply-chain analytics
 # ==========================================================================
 
 # --------------------------------------------------------------------------
@@ -4659,14 +4635,11 @@ SELECT *, price_cv > {UPD_CV_FLAG} AS dispersed FROM eff
 """
 
 
-PREPARED_R10.update(
-    {
-        "abc_xyz_classification": (abc_xyz_classification, _ABC_ORACLE),
-        "ship_lead_time_profile": (ship_lead_time_profile, _LEAD_ORACLE),
-        "supplier_concentration_by_part": (
-            supplier_concentration_by_part,
-            _SUPCON_ORACLE,
-        ),
-        "unit_price_dispersion": (unit_price_dispersion, _UPD_ORACLE),
-    }
-)
+register("abc_xyz_classification", oracle=_ABC_ORACLE,
+         tags=("prepared-r10",))(abc_xyz_classification)
+register("ship_lead_time_profile", oracle=_LEAD_ORACLE,
+         tags=("prepared-r10",))(ship_lead_time_profile)
+register("supplier_concentration_by_part", oracle=_SUPCON_ORACLE,
+         tags=("prepared-r10",))(supplier_concentration_by_part)
+register("unit_price_dispersion", oracle=_UPD_ORACLE,
+         tags=("prepared-r10",))(unit_price_dispersion)

@@ -1,10 +1,8 @@
 """Second batch of operators prepared in round 7 for round-8 registration.
 
-Same contract as ``prepared.py`` (which merges this module's
-``PREPARED_R8_BATCH2`` into ``PREPARED_R8``): every entry is a complete
-(query fn, DuckDB oracle) pair held to the driver-identical comparison
-harness by tests/test_prepared.py NOW, with registration deferred one
-round so the round-7 driver window drains the re-proof backlog.
+Same contract as ``prepared.py``: every query registers with
+``register(...)`` as a complete (query fn, DuckDB oracle) pair held to
+the driver-identical comparison by tests/test_oracle.py.
 
 This batch covers the classical statistical-testing surface a data
 platform bolts onto the warehouse — two-sample drift tests, contingency
@@ -19,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -470,11 +468,12 @@ FROM z
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH2 = {
-    "ks_test_drift": (ks_test_drift, _KS_ORACLE),
-    "contingency_association": (contingency_association, _CONTINGENCY_ORACLE),
-    "correlation_matrix": (correlation_matrix, _corr_oracle()),
-    "crosscorr_daily_series": (crosscorr_daily_series, _XCORR_ORACLE),
-    "ab_conversion_lift": (ab_conversion_lift, _AB_ORACLE),
-}
+register("ks_test_drift", oracle=_KS_ORACLE, tags=("prepared-r8",))(ks_test_drift)
+register("contingency_association", oracle=_CONTINGENCY_ORACLE,
+         tags=("prepared-r8",))(contingency_association)
+register("correlation_matrix", oracle=_corr_oracle(),
+         tags=("prepared-r8",))(correlation_matrix)
+register("crosscorr_daily_series", oracle=_XCORR_ORACLE,
+         tags=("prepared-r8",))(crosscorr_daily_series)
+register("ab_conversion_lift", oracle=_AB_ORACLE,
+         tags=("prepared-r8",))(ab_conversion_lift)

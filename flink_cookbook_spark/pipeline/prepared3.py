@@ -1,13 +1,13 @@
 """Third round-7 batch of round-8-prepared operators: platform/ops
 tooling for the 100 TB posture.
 
-Same deferred-registration contract as ``prepared.py`` /
-``prepared2.py``. This batch is the operational side of running the
-engine at scale — the diagnostics a platform team computes ABOUT the
-data layout itself: shuffle-partition skew under candidate partition
-counts, write-side file compaction planning, Bloom-filter sizing
-calibration (the knob behind ``bloom_prefilter_join``), and
-referential-integrity auditing across the star schema's FK edges.
+Same contract as ``prepared.py``. This batch is the operational side
+of running the engine at scale — the diagnostics a platform team
+computes ABOUT the data layout itself: shuffle-partition skew under
+candidate partition counts, write-side file compaction planning,
+Bloom-filter sizing calibration (the knob behind
+``bloom_prefilter_join``), and referential-integrity auditing across
+the star schema's FK edges.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
 from flink_cookbook_spark.pipeline.dedup import _SQL_HASH, _portable_hash
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -473,10 +473,11 @@ LEFT JOIN (SELECT DISTINCT {pk} AS k, 1 AS hit FROM {parent_t}) p
     return "\nUNION ALL\n".join(arms)
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH3 = {
-    "partition_skew_report": (partition_skew_report, _SKEW_ORACLE),
-    "file_compaction_plan": (file_compaction_plan, _COMPACTION_ORACLE),
-    "bloom_fpr_calibration": (bloom_fpr_calibration, _bloom_oracle()),
-    "fk_integrity_audit": (fk_integrity_audit, _fk_oracle()),
-}
+register("partition_skew_report", oracle=_SKEW_ORACLE,
+         tags=("prepared-r8",))(partition_skew_report)
+register("file_compaction_plan", oracle=_COMPACTION_ORACLE,
+         tags=("prepared-r8",))(file_compaction_plan)
+register("bloom_fpr_calibration", oracle=_bloom_oracle(),
+         tags=("prepared-r8",))(bloom_fpr_calibration)
+register("fk_integrity_audit", oracle=_fk_oracle(),
+         tags=("prepared-r8",))(fk_integrity_audit)

@@ -1,7 +1,7 @@
 """Fourth round-7 batch of round-8-prepared operators: text statistics,
 graph shape, rank fusion, and resampling inference.
 
-Same deferred-registration contract as ``prepared.py``. This batch
+Same contract as ``prepared.py``. This batch
 rounds out the analytics surface with (1) the classical lexical-
 diversity statistics per document, (2) the degree distribution of the
 co-purchase graph with a power-law tail fit, (3) reciprocal-rank
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
 from flink_cookbook_spark.pipeline.dedup import _SQL_HASH, _portable_hash
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -489,12 +489,11 @@ FROM sm CROSS JOIN boot b
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH4 = {
-    "lexical_diversity_profile": (lexical_diversity_profile, _LEXDIV_ORACLE),
-    "copurchase_degree_distribution": (
-        copurchase_degree_distribution, _DEGREE_ORACLE,
-    ),
-    "rank_fusion_topk": (rank_fusion_topk, _rrf_oracle()),
-    "bootstrap_median_ci": (bootstrap_median_ci, _boot_oracle()),
-}
+register("lexical_diversity_profile", oracle=_LEXDIV_ORACLE,
+         tags=("prepared-r8",))(lexical_diversity_profile)
+register("copurchase_degree_distribution", oracle=_DEGREE_ORACLE,
+         tags=("prepared-r8",))(copurchase_degree_distribution)
+register("rank_fusion_topk", oracle=_rrf_oracle(),
+         tags=("prepared-r8",))(rank_fusion_topk)
+register("bootstrap_median_ci", oracle=_boot_oracle(),
+         tags=("prepared-r8",))(bootstrap_median_ci)

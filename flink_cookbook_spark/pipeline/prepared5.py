@@ -1,7 +1,7 @@
 """Fifth round-7 batch of round-8-prepared operators: seasonal
 forecasting, robust statistics, and corpus-economics decision tables.
 
-Same deferred-registration contract as ``prepared.py``. The seasonal
+Same contract as ``prepared.py``. The seasonal
 Holt-Winters fold extends the engine's forecaster family (EWMA ->
 Holt linear -> Holt-Winters additive) toward the reference's seasonal
 SARIMA territory with a closed-form, oracle-replayable recurrence;
@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -637,12 +637,15 @@ FROM per_source
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH5 = {
-    "holt_winters_seasonal": (holt_winters_seasonal, _hw_oracle()),
-    "theil_sen_trend": (theil_sen_trend, _THEILSEN_ORACLE),
-    "benford_law_check": (benford_law_check, _BENFORD_ORACLE),
-    "runs_test_randomness": (runs_test_randomness, _RUNS_ORACLE),
-    "vocab_coverage_curve": (vocab_coverage_curve, _COVERAGE_ORACLE),
-    "dedup_token_savings": (dedup_token_savings, _SAVINGS_ORACLE),
-}
+register("holt_winters_seasonal", oracle=_hw_oracle(),
+         tags=("prepared-r8",))(holt_winters_seasonal)
+register("theil_sen_trend", oracle=_THEILSEN_ORACLE,
+         tags=("prepared-r8",))(theil_sen_trend)
+register("benford_law_check", oracle=_BENFORD_ORACLE,
+         tags=("prepared-r8",))(benford_law_check)
+register("runs_test_randomness", oracle=_RUNS_ORACLE,
+         tags=("prepared-r8",))(runs_test_randomness)
+register("vocab_coverage_curve", oracle=_COVERAGE_ORACLE,
+         tags=("prepared-r8",))(vocab_coverage_curve)
+register("dedup_token_savings", oracle=_SAVINGS_ORACLE,
+         tags=("prepared-r8",))(dedup_token_savings)

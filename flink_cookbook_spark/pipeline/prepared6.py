@@ -1,7 +1,7 @@
 """Sixth round-7 batch of round-8-prepared operators: model-evaluation
 and econometrics shapes.
 
-Same deferred-registration contract as ``prepared.py``. This batch is
+Same contract as ``prepared.py``. This batch is
 the "evaluate the model on held-out data" surface: a Markov-chain
 perplexity with a real train/eval time split (the LM-eval shape in
 miniature), a one-step forecast backtest that scores three baseline
@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 #: epoch-second train/eval boundary (2024-01-16 00:00 UTC), shared with
 #: the KS drift test: train on the first half of the month, evaluate on
@@ -519,11 +519,12 @@ FROM fit
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH6 = {
-    "transition_perplexity": (transition_perplexity, _PERPLEXITY_ORACLE),
-    "forecast_backtest": (forecast_backtest, _BACKTEST_ORACLE),
-    "mann_whitney_u": (mann_whitney_u, _MWU_ORACLE),
-    "revenue_share_hierarchy": (revenue_share_hierarchy, _HIERARCHY_ORACLE),
-    "discount_elasticity": (discount_elasticity, _ELASTICITY_ORACLE),
-}
+register("transition_perplexity", oracle=_PERPLEXITY_ORACLE,
+         tags=("prepared-r8",))(transition_perplexity)
+register("forecast_backtest", oracle=_BACKTEST_ORACLE,
+         tags=("prepared-r8",))(forecast_backtest)
+register("mann_whitney_u", oracle=_MWU_ORACLE, tags=("prepared-r8",))(mann_whitney_u)
+register("revenue_share_hierarchy", oracle=_HIERARCHY_ORACLE,
+         tags=("prepared-r8",))(revenue_share_hierarchy)
+register("discount_elasticity", oracle=_ELASTICITY_ORACLE,
+         tags=("prepared-r8",))(discount_elasticity)

@@ -1,7 +1,7 @@
 """Seventh round-7 batch of round-8-prepared operators: variance
 decomposition, sketch algebra, information rate, and cohort economics.
 
-Same deferred-registration contract as ``prepared.py``. One-way ANOVA
+Same contract as ``prepared.py``. One-way ANOVA
 closes the parametric-testing gap (z/U/KS/chi-square are all pairwise
 or categorical; ANOVA is the k-group mean comparison); the KMV Jaccard
 estimator extends the engine's sketch family from cardinalities to SET
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
 from flink_cookbook_spark.pipeline.dedup import _SQL_HASH, _portable_hash
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 
 # --------------------------------------------------------------------------
@@ -424,10 +424,10 @@ FROM purchases p JOIN sizes s ON p.cohort_wk = s.cohort_wk
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH7 = {
-    "anova_oneway": (anova_oneway, _ANOVA_ORACLE),
-    "kmv_jaccard_overlap": (kmv_jaccard_overlap, _kmvj_oracle()),
-    "markov_entropy_rate": (markov_entropy_rate, _ENTROPY_ORACLE),
-    "cohort_ltv_curve": (cohort_ltv_curve, _LTV_ORACLE),
-}
+register("anova_oneway", oracle=_ANOVA_ORACLE, tags=("prepared-r8",))(anova_oneway)
+register("kmv_jaccard_overlap", oracle=_kmvj_oracle(),
+         tags=("prepared-r8",))(kmv_jaccard_overlap)
+register("markov_entropy_rate", oracle=_ENTROPY_ORACLE,
+         tags=("prepared-r8",))(markov_entropy_rate)
+register("cohort_ltv_curve", oracle=_LTV_ORACLE,
+         tags=("prepared-r8",))(cohort_ltv_curve)

@@ -1,7 +1,7 @@
 """Eighth round-7 batch of round-8-prepared operators: experiment
 design and population estimation.
 
-Same deferred-registration contract as ``prepared.py``. These three
+Same contract as ``prepared.py``. These three
 close the experimentation loop the engine's test operators opened:
 ``ab_conversion_lift`` reports whether an effect was detected,
 ``ab_power_analysis`` says what sample the NEXT experiment needs,
@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 #: conversion predicate shared with ab_conversion_lift's shape: a user
 #: converts when any purchase exceeds this metric value.
@@ -336,11 +336,9 @@ FROM agg
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH8 = {
-    "ab_power_analysis": (ab_power_analysis, _POWER_ORACLE),
-    "sprt_sequential_test": (sprt_sequential_test, _sprt_oracle()),
-    "capture_recapture_estimate": (
-        capture_recapture_estimate, _CR_ORACLE,
-    ),
-}
+register("ab_power_analysis", oracle=_POWER_ORACLE,
+         tags=("prepared-r8",))(ab_power_analysis)
+register("sprt_sequential_test", oracle=_sprt_oracle(),
+         tags=("prepared-r8",))(sprt_sequential_test)
+register("capture_recapture_estimate", oracle=_CR_ORACLE,
+         tags=("prepared-r8",))(capture_recapture_estimate)

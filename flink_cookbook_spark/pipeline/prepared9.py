@@ -1,7 +1,7 @@
 """Ninth round-7 batch of round-8-prepared operators: multiple-testing
 control, admission control, classifier agreement, and extreme values.
 
-Same deferred-registration contract as ``prepared.py``. The FDR scan
+Same contract as ``prepared.py``. The FDR scan
 is the missing discipline on top of the engine's per-segment tests
 (run 35 z-tests a day and alpha=0.05 hands you ~2 false alarms daily —
 Benjamini-Hochberg is how a platform reports segment shifts without
@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flink_cookbook_spark.catalog import load
-from flink_cookbook_spark.registry import rnd
+from flink_cookbook_spark.registry import register, rnd
 
 #: first-half/second-half split shared with the other drift tests.
 SPLIT_EPOCH_S = 1705363200
@@ -444,12 +444,11 @@ FROM fanned
 """
 
 
-#: name -> (query fn, oracle SQL), merged into prepared.PREPARED_R8.
-PREPARED_R8_BATCH9 = {
-    "fdr_segment_scan": (fdr_segment_scan, _FDR_ORACLE),
-    "rate_limit_simulation": (rate_limit_simulation, _rl_oracle()),
-    "lang_id_agreement_kappa": (lang_id_agreement_kappa, _kappa_oracle()),
-    "extreme_value_return_levels": (
-        extreme_value_return_levels, _EVT_ORACLE,
-    ),
-}
+register("fdr_segment_scan", oracle=_FDR_ORACLE,
+         tags=("prepared-r8",))(fdr_segment_scan)
+register("rate_limit_simulation", oracle=_rl_oracle(),
+         tags=("prepared-r8",))(rate_limit_simulation)
+register("lang_id_agreement_kappa", oracle=_kappa_oracle(),
+         tags=("prepared-r8",))(lang_id_agreement_kappa)
+register("extreme_value_return_levels", oracle=_EVT_ORACLE,
+         tags=("prepared-r8",))(extreme_value_return_levels)

@@ -296,20 +296,15 @@ def _ensure_loaded() -> None:
     import flink_cookbook_spark.streaming.sarimax  # noqa: F401
     import flink_cookbook_spark.streaming.sources  # noqa: F401
     import flink_cookbook_spark.streaming.twins  # noqa: F401
-
-    # round-8 flip: the round-7 prepared cohort registers here (the
-    # call is idempotent — see pipeline/prepared.py docstring). The
-    # prepared module bootstraps composed oracles through get_query()
-    # during ITS import, which re-enters this function; skip while it
-    # is mid-import (no `activate` attribute yet) — the outer frame's
-    # import completes and activates.
-    import sys
-
-    _mod = sys.modules.get("flink_cookbook_spark.pipeline.prepared")
-    if _mod is None or hasattr(_mod, "activate"):
-        from flink_cookbook_spark.pipeline import prepared
-
-        prepared.activate()
+    # prepared.py builds two composed oracles through get_query() while it
+    # imports, which re-enters this function; that is safe because Python
+    # does not run a module again that is already being imported.
+    from flink_cookbook_spark.pipeline import (  # noqa: F401
+        prepared, prepared2, prepared3, prepared4, prepared5, prepared6,
+        prepared7, prepared8, prepared9, prepared10, prepared11, prepared12,
+        prepared13, prepared14, prepared15, prepared16, prepared17,
+        prepared18, prepared19,
+    )
 
 
 def get_query(name: str) -> QuerySpec:

@@ -151,25 +151,11 @@ def main() -> None:
         clear()
         specs = all_specs()
         which = os.environ.get("SPARK_GRAFT_PROBE_PREPARED")
-        if which:
-            # also hold a prepared cohort to the gate at scale:
-            # "r10" = the round-9-built deferred cohort (prepared19),
-            # anything else = the live round-8 cohort
-            from flink_cookbook_spark.registry import QuerySpec
-
-            if which == "r10":
-                from flink_cookbook_spark.pipeline.prepared19 import (
-                    PREPARED_R10 as _cohort,
-                )
-            else:
-                from flink_cookbook_spark.pipeline.prepared import (
-                    PREPARED_R8 as _cohort,
-                )
-            specs = dict(specs)
-            for n, (fn, oracle) in _cohort.items():
-                specs[n] = QuerySpec(name=n, fn=fn, oracle=oracle)
-            if names == _DEFAULT:
-                names = tuple(_cohort)
+        if which and names == _DEFAULT:
+            # hold a prepared cohort to the gate at scale: "r10" = the
+            # prepared-r10 tag (prepared19), anything else = prepared-r8
+            tag = "prepared-r10" if which == "r10" else "prepared-r8"
+            names = tuple(n for n, s in specs.items() if tag in s.tags)
         if names == ("ALL",):
             # whole-registry sweep: every registered query with an
             # oracle, alphabetically (rows-only queries report SKIP).

@@ -730,18 +730,19 @@ def test_ntile_is_single_exchange_per_segment(spark, sf_dir):
 
 
 def test_prepared_cohort_no_plain_cartesian(spark, sf_dir):
-    """Scale hygiene for the round-8-prepared cohort, pinned before
-    registration: no prepared plan may contain a plain CartesianProduct
-    (both sides unbounded, quadratic at 100 TB). BroadcastNestedLoop is
-    tolerated ONLY where the build side is bounded by construction —
-    the capped md5 samples and 1-row/constant-list broadcasts."""
-    from flink_cookbook_spark.pipeline.prepared import PREPARED_R8
+    """Scale hygiene for the round-8-prepared cohort: no prepared plan
+    may contain a plain CartesianProduct (both sides unbounded,
+    quadratic at 100 TB). BroadcastNestedLoop is tolerated ONLY where
+    the build side is bounded by construction — the capped md5 samples
+    and 1-row/constant-list broadcasts."""
     from flink_cookbook_spark.plans.explain import formatted_plan
+    from flink_cookbook_spark.registry import all_specs
 
     offenders = []
-    for name in sorted(PREPARED_R8):
-        fn, _ = PREPARED_R8[name]
-        plan = formatted_plan(fn(spark, sf_dir))
+    for name, spec in sorted(all_specs().items()):
+        if "prepared-r8" not in spec.tags:
+            continue
+        plan = formatted_plan(spec.fn(spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append(name)
     assert not offenders, offenders

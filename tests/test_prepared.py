@@ -1,18 +1,20 @@
 """Semantic property tests for the round-7-prepared operator cohort.
 
-The cohort has been REGISTERED since round 8 (registry._ensure_loaded
-calls prepared.activate()), so the driver-identical oracle comparison
-for every pair now runs through tests/test_oracle.py like any other
-registered query — duplicating it here would double the suite cost for
-103 queries. This module keeps the ground-truth property tests plus a
-registration-integrity check (every prepared pair live, with the SAME
-oracle string it was verified under)."""
+The ``pipeline/prepared*.py`` modules register their queries with
+``register(...)`` like every other operator module, so the
+driver-identical oracle comparison for every pair runs through
+tests/test_oracle.py — duplicating it here would double the suite cost
+for 141 queries. This module keeps the ground-truth property tests plus
+the registration pins: the cohort sizes per tag, a duplicate name
+rejected at registration, and the re-entrant cold import order."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
-from flink_cookbook_spark.pipeline.prepared import PREPARED_R8
+from flink_cookbook_spark.registry import all_specs, get_query
 from tests.oracle_harness import compare, duckdb_connection
 
 
@@ -23,23 +25,24 @@ def con(sf_dir):
     c.close()
 
 
-def test_prepared_cohort_registered_verbatim():
-    """Every prepared pair must be live in the registry under its own
-    name with the exact oracle string it was harness-verified with —
-    a silent oracle drift between the prepared table and the registry
-    would invalidate the round-7 verification."""
-    from flink_cookbook_spark.registry import all_specs
+def _tagged(tag: str) -> list[str]:
+    return sorted(n for n, s in all_specs().items() if tag in s.tags)
 
+
+def test_prepared_cohorts_registered():
+    """Both prepared cohorts are live at their full size, and each query
+    is registered by its own prepared module: the round-8 cohort by
+    ``prepared`` / ``prepared2`` ... ``prepared18``, the round-10 cohort
+    by ``prepared19``. A dropped registration, or a query of another
+    module carrying a cohort tag, fails here."""
     specs = all_specs()
-    missing = set(PREPARED_R8) - set(specs)
-    assert not missing, f"prepared pairs not registered: {sorted(missing)}"
-    drift = [
-        name
-        for name, (fn, oracle) in PREPARED_R8.items()
-        if specs[name].oracle != oracle or specs[name].fn is not fn
-    ]
-    assert not drift, f"registered form differs from verified form: {drift}"
-    assert all("prepared-r8" in specs[n].tags for n in PREPARED_R8)
+    r8, r10 = _tagged("prepared-r8"), _tagged("prepared-r10")
+    assert (len(r8), len(r10)) == (103, 38)
+    mod = re.compile(r"flink_cookbook_spark\.pipeline\.prepared(\d*)")
+    for name in r8 + r10:
+        m = mod.fullmatch(specs[name].fn.__module__)
+        assert m, (name, specs[name].fn.__module__)
+        assert (m.group(1) == "19") == (name in r10), (name, m.group(0))
 
 
 def test_asof_tolerance_actually_filters(spark, sf_dir):
@@ -95,22 +98,6 @@ def test_pq_code_compresses_and_reconstructs(spark, sf_dir):
     assert all(r.ca >= 0 and r.cb >= 0 for r in rows)
     assert all(r.mse >= 0 for r in rows)
     assert any(r.mse > 0 for r in rows)
-
-
-def test_prepared_oracles_pass_hugeint_lint():
-    """Hold prepared oracles to the HUGEINT lint (same DESCRIBE check
-    the registry-wide lint enforces — kept here too so a future batch
-    added to PREPARED_R8 fails fast even before registration)."""
-    from tests.conftest import SF_DIR
-
-    con = duckdb_connection(SF_DIR)
-    offenders = []
-    for name, (_, oracle) in sorted(PREPARED_R8.items()):
-        for col, typ, *_ in con.execute("DESCRIBE " + oracle).fetchall():
-            if "HUGEINT" in typ.upper():
-                offenders.append(f"{name}.{col}: {typ}")
-    con.close()
-    assert not offenders, offenders
 
 
 def test_funnel_always_emits_every_stage(spark, sf_dir):
@@ -203,9 +190,7 @@ def test_new_prepared_survive_empty_tables(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from flink_cookbook_spark.pipeline._cache import clear
-    from flink_cookbook_spark.pipeline.prepared import (
-        PREPARED_R8, filter_funnel_report,
-    )
+    from flink_cookbook_spark.pipeline.prepared import filter_funnel_report
 
     pq.write_table(
         pa.table(
@@ -249,7 +234,7 @@ def test_new_prepared_survive_empty_tables(spark, tmp_path):
         "event_rate_profile",
         "zipf_fit",
     ):
-        fn, _ = PREPARED_R8[name]
+        fn = get_query(name).fn
         assert fn(spark, str(tmp_path)).count() == 0, name
     rows = filter_funnel_report(spark, str(tmp_path)).collect()
     assert len(rows) == 4
@@ -814,7 +799,7 @@ def test_decile_lift_partitions_customers(spark, sf_dir):
 
 
 def test_prepared_broadcast_hints_are_bounded(spark, sf_dir):
-    """Pre-registration broadcast lint: every F.broadcast in a prepared
+    """Broadcast lint: every F.broadcast in a round-8-prepared
     operator must hint a bounded subtree (1-row aggregate, constant
     local relation, or a capped md5 sample), mirroring the registry-wide
     test_no_forced_broadcast_of_unbounded_aggregate. The capped samples
@@ -829,10 +814,10 @@ def test_prepared_broadcast_hints_are_bounded(spark, sf_dir):
     from tests.test_plans import _broadcast_hint_subtrees, _hint_is_bounded
 
     offenders = []
-    for name in sorted(PREPARED_R8):
+    for name in _tagged("prepared-r8"):
         if name in capped:
             continue
-        fn, _ = PREPARED_R8[name]
+        fn = get_query(name).fn
         try:
             src = inspect.getsource(fn)
         except (OSError, TypeError):
@@ -899,41 +884,34 @@ def test_ensemble_consensus_ordering(spark, sf_dir):
     assert any(r.n_flag_z + r.n_flag_mad + r.n_flag_iqr > 0 for r in rows)
 
 
-def test_round8_activation_live_and_idempotent(sf_dir):
-    """The round-8 flip is live: a cold process exposes every prepared
-    pair through the driver contract (queries()/oracle_sql()), a second
-    explicit activate() is a no-op (idempotent — _ensure_loaded calls
-    it on every invocation), and a newly-activated query runs
-    end-to-end through queries()."""
+def test_cold_reentrant_import_order_registers_everything():
+    """``prepared.py`` builds two composed oracles through get_query()
+    while it imports, which re-enters ``registry._ensure_loaded``; the
+    streaming replays import ``prepared8`` before any of that. A cold
+    process that imports in exactly that order, with no Spark session,
+    must still expose every query and oracle through the driver
+    contract."""
     import json
+    import os
     import subprocess
     import sys
 
-    code = f"""
-import json, sys
-sys.path.insert(0, "/root/repo")
+    code = """
+import json
+import flink_cookbook_spark.streaming.sequential
+import flink_cookbook_spark.pipeline.prepared
 import __spark_entry__ as e
-qs, os_ = e.queries(), e.oracle_sql()
-from flink_cookbook_spark.pipeline.prepared import PREPARED_R8, activate
-assert set(PREPARED_R8) <= set(qs), "prepared queries missing from queries()"
-assert set(PREPARED_R8) <= set(os_), "prepared oracles missing from oracle_sql()"
-from flink_cookbook_spark.registry import all_specs
-before = len(all_specs())
-activate()  # explicit second call must be a no-op
-after = len(all_specs())
-from flink_cookbook_spark.session import get_spark
-spark = get_spark()
-n = qs["kaplan_meier_survival"](spark, {sf_dir!r}).count()
-print(json.dumps({{"before": before, "after": after, "rows": n}}))
+from pyspark import SparkContext
+assert SparkContext._active_spark_context is None
+print(json.dumps([len(e.queries()), len(e.oracle_sql())]))
 """
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
-        timeout=300,
+        timeout=300, cwd=root,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    res = json.loads(out.stdout.strip().splitlines()[-1])
-    assert res["after"] == res["before"]
-    assert res["rows"] > 0
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == [369, 367]
 
 
 def test_ks_statistic_is_a_valid_distance(spark, sf_dir):
@@ -1996,27 +1974,18 @@ def test_ess_never_exceeds_n(spark, sf_dir):
         assert r.rho_sum_pos >= -1e-6
 
 
-def test_activate_raises_on_foreign_collision():
-    """activate() skips a name only when the registered fn IS the
-    prepared fn (idempotency); a FOREIGN registration colliding with a
-    prepared name must raise at activation time, not be silently
-    shadowed (round-8 ADVICE)."""
-    import pytest
-
+def test_register_rejects_duplicate_name():
+    """A second function registered under a live name raises at
+    registration and leaves the original spec in place, so a prepared
+    name that collides with another module's fails on import instead
+    of shadowing the harness-verified pair."""
     from flink_cookbook_spark import registry
-    from flink_cookbook_spark.pipeline.prepared import PREPARED_R8, activate
 
-    registry._ensure_loaded()
-    name = sorted(PREPARED_R8)[0]
-    original = registry._REGISTRY[name]
+    original = get_query("zipf_fit")
 
     def impostor(spark, sf_dir):  # pragma: no cover - never called
         raise AssertionError
 
-    try:
-        registry._REGISTRY[name] = registry.QuerySpec(name=name, fn=impostor)
-        with pytest.raises(ValueError, match="foreign"):
-            activate()
-    finally:
-        registry._REGISTRY[name] = original
-    activate()  # restored state must activate cleanly again
+    with pytest.raises(ValueError, match="duplicate query name 'zipf_fit'"):
+        registry.register("zipf_fit")(impostor)
+    assert registry._REGISTRY["zipf_fit"] is original

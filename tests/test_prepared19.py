@@ -1,36 +1,13 @@
-"""Round-9-prepared cohort (live since round 10): registration pin +
-semantic property tests.
+"""Round-9-prepared cohort (registered since round 10 under tag
+``prepared-r10``): semantic property tests.
 
-Every pair in PREPARED_R10 (batches 1-7: 7 + 5 + 6 + 6 + 6 + 4 + 4 =
-38) is registered since round 10 (the round-9 freeze drained the
-pending backlog first — r8 verdict ask #1), so the driver-identical
-oracle comparison now runs through the registry-wide replica in
-tests/test_oracle.py; this module pins the registration (exact fn +
-oracle identity) and keeps the cohort's semantic property tests."""
+The driver-identical oracle comparison runs through the registry-wide
+replica in tests/test_oracle.py, and tests/test_prepared.py pins the
+cohort's registration (38 queries, all from ``prepared19``)."""
 
 from __future__ import annotations
 
 import math
-
-from flink_cookbook_spark.pipeline.prepared19 import PREPARED_R10
-
-
-def test_r10_cohort_registered_verbatim():
-    """Round-10 flip: every cohort pair must be live in the registry as
-    THIS module's fn + oracle (a foreign registration shadowing a
-    harness-verified pair, or a silent drop, both fail here). The
-    oracle comparison itself runs in tests/test_oracle.py like every
-    other registered query."""
-    from flink_cookbook_spark.registry import all_specs
-
-    live = all_specs()
-    missing = sorted(set(PREPARED_R10) - set(live))
-    assert not missing, f"r10 cohort not registered: {missing}"
-    for name, (fn, oracle) in PREPARED_R10.items():
-        spec = live[name]
-        assert spec.fn is fn, name
-        assert spec.oracle == oracle, name
-        assert "prepared-r10" in spec.tags, name
 
 
 def test_welch_df_and_flag_are_consistent(spark, sf_dir):
