@@ -5,8 +5,8 @@ The ``pipeline/prepared*.py`` modules register their queries with
 driver-identical oracle comparison for every pair runs through
 tests/test_oracle.py — duplicating it here would double the suite cost
 for 141 queries. This module keeps the ground-truth property tests plus
-the registration pins: the cohort sizes per tag, a duplicate name
-rejected at registration, and the re-entrant cold import order."""
+the registration pins: the round-8 cohort size, a duplicate name rejected
+at registration, and the re-entrant cold import order."""
 
 from __future__ import annotations
 
@@ -29,20 +29,30 @@ def _tagged(tag: str) -> list[str]:
     return sorted(n for n, s in all_specs().items() if tag in s.tags)
 
 
-def test_prepared_cohorts_registered():
-    """Both prepared cohorts are live at their full size, and each query
-    is registered by its own prepared module: the round-8 cohort by
-    ``prepared`` / ``prepared2`` ... ``prepared18``, the round-10 cohort
-    by ``prepared19``. A dropped registration, or a query of another
-    module carrying a cohort tag, fails here."""
+_PREPARED_MODULE = re.compile(r"flink_cookbook_spark\.pipeline\.prepared(\d*)")
+
+
+def _cohort_modules(tag: str) -> dict[str, str]:
+    """Map each query tagged ``tag`` to the numeric suffix of the
+    ``prepared*`` module that registered it (failing on any other)."""
     specs = all_specs()
-    r8, r10 = _tagged("prepared-r8"), _tagged("prepared-r10")
-    assert (len(r8), len(r10)) == (103, 38)
-    mod = re.compile(r"flink_cookbook_spark\.pipeline\.prepared(\d*)")
-    for name in r8 + r10:
-        m = mod.fullmatch(specs[name].fn.__module__)
+    out = {}
+    for name in _tagged(tag):
+        m = _PREPARED_MODULE.fullmatch(specs[name].fn.__module__)
         assert m, (name, specs[name].fn.__module__)
-        assert (m.group(1) == "19") == (name in r10), (name, m.group(0))
+        assert specs[name].oracle, name
+        out[name] = m.group(1)
+    return out
+
+
+def test_prepared_cohort_registered_verbatim():
+    """The round-8 cohort is live at its full size, each query registered
+    by ``prepared`` / ``prepared2`` ... ``prepared18`` with an oracle. A
+    dropped registration, or a query of another module (``prepared19``
+    included) carrying the ``prepared-r8`` tag, fails here."""
+    mods = _cohort_modules("prepared-r8")
+    assert len(mods) == 103
+    assert all(suffix != "19" for suffix in mods.values()), mods
 
 
 def test_asof_tolerance_actually_filters(spark, sf_dir):

@@ -2,12 +2,24 @@
 ``prepared-r10``): semantic property tests.
 
 The driver-identical oracle comparison runs through the registry-wide
-replica in tests/test_oracle.py, and tests/test_prepared.py pins the
-cohort's registration (38 queries, all from ``prepared19``)."""
+replica in tests/test_oracle.py; this module pins the cohort's
+registration (38 queries, all from ``prepared19``)."""
 
 from __future__ import annotations
 
 import math
+
+from tests.test_prepared import _cohort_modules
+
+
+def test_r10_cohort_registered_verbatim():
+    """The round-10 cohort is live at its full size, each query
+    registered by ``prepared19`` with an oracle. A dropped registration,
+    or a query of another module carrying the ``prepared-r10`` tag, fails
+    here."""
+    mods = _cohort_modules("prepared-r10")
+    assert len(mods) == 38
+    assert set(mods.values()) == {"19"}, mods
 
 
 def test_welch_df_and_flag_are_consistent(spark, sf_dir):
